@@ -184,7 +184,7 @@ object Bench {
     try {
       log.count()
       val t0 = System.nanoTime()
-      CdcPipeline.replay(spark, log, table, numBatches = 4, salt = 8, writeMetrics = false)
+      CdcPipeline.replay(spark, log, table, numBatches = 4, writeMetrics = false)
       table.snapshot(spark).foreach(_.count()) // force a converged read
       val sec = (System.nanoTime() - t0) / 1e9
       (sec, numEvents / sec)
@@ -215,7 +215,7 @@ object Bench {
     val root = tmpRoot("graft-bench-sh")
     val table = new LakeTable(root.toString, numBuckets = NumBuckets, mergeOnRead = mor)
     val init = SyntheticLog.generate(spark, stateEvents, numKeys = stateEvents, parts = SourceParts)
-    CdcPipeline.replay(spark, init, table, numBatches = 2, salt = 8, writeMetrics = false)
+    CdcPipeline.replay(spark, init, table, numBatches = 2, writeMetrics = false)
     // Shuffle-bytes meter: wall time barely moves in local mode (a shuffle
     // costs about as much as a tmpfs read), but on a cluster the exchange
     // is network-bound — bytes moved is the honest scale metric.
@@ -231,7 +231,7 @@ object Bench {
       (0 until batches).foreach { i =>
         val b = SyntheticLog.generate(spark, batchEvents, numKeys = stateEvents,
           parts = SourceParts, startId = stateEvents + i * batchEvents)
-        graft.merge.CdcApply.applyBatch(spark, table, b, batchId = 2 + i, salt = 8,
+        graft.merge.CdcApply.applyBatch(spark, table, b, batchId = 2 + i,
           writeMetrics = false)
       }
       val sec = (System.nanoTime() - t0) / 1e9
@@ -302,12 +302,12 @@ object Bench {
     try {
       writeInput(0L, half) // untimed input staging
       val t0 = System.nanoTime()
-      CdcPipeline.start(spark, inDir, ckpt, table, salt = 8, maxFilesPerTrigger = SourceParts / 2)
+      CdcPipeline.start(spark, inDir, ckpt, table, maxFilesPerTrigger = SourceParts / 2)
         .awaitTermination()
       val firstSec = (System.nanoTime() - t0) / 1e9
       writeInput(half, numEvents - half)
       val t1 = System.nanoTime()
-      CdcPipeline.start(spark, inDir, ckpt, table, salt = 8, maxFilesPerTrigger = SourceParts / 2)
+      CdcPipeline.start(spark, inDir, ckpt, table, maxFilesPerTrigger = SourceParts / 2)
         .awaitTermination()
       val sec = firstSec + (System.nanoTime() - t1) / 1e9
       table.snapshot(spark).foreach(_.count()) // converged read-back

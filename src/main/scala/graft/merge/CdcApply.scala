@@ -38,16 +38,15 @@ import graft.table.{CommitInfo, LakeTable, LogPos, SchemaEvolution}
   *    `groupBy(part)`. The fences themselves are driver-known literals
   *    (`element_at(<watermark map literal>, part)`), so no join is needed.
   *  - Job 2 (merge+stage): the batch reduces to one winner per key in ONE
-  *    shuffle — `repartition(numBuckets, key)` whose HashPartitioning both
-  *    satisfies the aggregate's distribution (no second exchange) and
-  *    equals the bucket function, so each task writes exactly its own
-  *    bucket file. Copy-on-write tables then full-outer-join the winners
-  *    against the STORAGE-PARTITIONED state read (bucketed scan, zero
-  *    state-side exchange — `LakeTable.bucketedState` +
-  *    `Lww.mergeCoPartitioned`); merge-on-read tables skip the state scan
-  *    entirely and append the winner files (readers resolve per bucket).
-  *    Optional salted pre-reduce (hot-key level 1) adds one
-  *    batch-side-only shuffle.
+  *    shuffle — `Lww.reduceBucketed`, whose hash exchange equals the
+  *    bucket function, so each task writes exactly its own bucket file;
+  *    where the session allows its map-side partial aggregate, a hot key
+  *    ships at most one row per map task. Copy-on-write tables then
+  *    full-outer-join the winners against the STORAGE-PARTITIONED state
+  *    read (bucketed scan, zero state-side exchange —
+  *    `LakeTable.bucketedState` + `Lww.mergeCoPartitioned`); merge-on-read
+  *    tables skip the state scan entirely and append the winner files
+  *    (readers resolve per bucket).
   *  - Job 3 (metrics, optional): per-partition applied counts from the
   *    merged winners' `__src` tag (1 = batch side won), joined driver-side
   *    with the stats vector.
@@ -93,7 +92,6 @@ object CdcApply {
       table: LakeTable,
       batch: DataFrame,
       batchId: Long,
-      salt: Int = 1,
       writeMetrics: Boolean = true,
       fenceByWatermark: Boolean = true,
       cacheBatch: Boolean = true,
@@ -203,15 +201,15 @@ object CdcApply {
         if (batchFence.isDefined) (0 until table.numBuckets).toSet
         else stats.flatMap(_.getSeq[Int](stats.head.fieldIndex("bks"))).toSet
 
-      // Job 2: storage-partitioned merge. Batch side: optional salted
-      // pre-reduce, then ONE key-shuffle LWW reduce laid out
-      // one-partition-per-bucket (reducePartitioned: partition-id ==
-      // bucket-id, see LakeTable.stage contract). State side: bucketed
-      // scan of the touched buckets' files — NO shuffle (the scan reports
-      // the on-disk HashPartitioning; LakeTable.bucketedState). The
-      // full-outer winner-pick join is co-partitioned, so the whole merge
-      // moves only the batch over the wire — state ≫ batch at 10^10
-      // events no longer re-shuffles every microbatch.
+      // Job 2: storage-partitioned merge. Batch side: ONE key-shuffle LWW
+      // reduce laid out one-partition-per-bucket (Lww.reduceBucketed:
+      // partition-id == bucket-id, see LakeTable.stage contract). State
+      // side: bucketed scan of the touched buckets' files — NO shuffle
+      // (the scan reports the on-disk HashPartitioning;
+      // LakeTable.bucketedState). The full-outer winner-pick join is
+      // co-partitioned, so the whole merge moves only the batch over the
+      // wire — state ≫ batch at 10^10 events no longer re-shuffles every
+      // microbatch.
       val dataEvents = cached.where(freshPred && isData)
       val aligned = SchemaEvolution.align(dataEvents, evolved)
       val alignedFenced = batchFence.fold(aligned)(f => aligned.where(posCol > posLit(f)))
@@ -236,24 +234,6 @@ object CdcApply {
         else last.flatMap(ci => table.bucketedState(spark, ci, Some(touched), evolved))
           .map(st => batchFence.fold(st)(f => st.where(posCol > posLit(f))))
 
-      // Bucket-layout LWW reduce: prefer the single-exchange plan with
-      // native map-side combine (Lww.reduceBucketedExact — partial agg
-      // bounds hot keys at one row per map task, no salt stage needed);
-      // fall back to salted-level-1 + repartition when the session's
-      // shuffle-partition count or AQE coalescing can't guarantee the
-      // partition-id==bucket contract.
-      // `exactIn` feeds the partial-agg plan; `fallbackIn` (lazy) feeds the
-      // repartition plan and is where the caller pre-salts ONLY the batch
-      // side (state already holds ≤1 row/key — salting it would add a
-      // pointless state shuffle).
-      def layoutReduce(
-          exactIn: org.apache.spark.sql.DataFrame,
-          fallbackIn: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        Lww.reduceBucketedExact(exactIn, table.keyCols, table.numBuckets)
-          .getOrElse(Lww.reducePartitioned(fallbackIn, table.keyCols, table.numBuckets))
-      def salted(in: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        if (salt > 1) Lww.saltedPartial(in, table.keyCols, salt) else in
-
       // Winners carry __src (1 = the batch side won the key) so the
       // applied-winner metric falls out of the merged result.
       val merged0 =
@@ -263,9 +243,9 @@ object CdcApply {
           // file stack (LakeTable.resolved). O(batch) apply regardless of
           // table size — the incremental-regime answer to copy-on-write
           // amplification.
-          layoutReduce(alignedFenced, salted(alignedFenced)).withColumn("__src", lit(1))
+          Lww.reduceBucketed(alignedFenced, table.keyCols, table.numBuckets).withColumn("__src", lit(1))
         } else if (!hasStateFiles || fastState.isDefined) {
-          val batchW = layoutReduce(alignedFenced, salted(alignedFenced))
+          val batchW = Lww.reduceBucketed(alignedFenced, table.keyCols, table.numBuckets)
           fastState match {
             case Some(st) => Lww.mergeCoPartitioned(st, batchW, table.keyCols, smj = table.sortedBuckets)
             case None     => batchW.withColumn("__src", lit(1))
@@ -280,7 +260,7 @@ object CdcApply {
           val st = last.flatMap(ci => table.snapshotRaw(spark, ci, Some(touched))).get
           val stAligned = SchemaEvolution.align(st, evolved).withColumn("__src", lit(0))
           val stFenced = batchFence.fold(stAligned)(f => stAligned.where(posCol > posLit(f)))
-          layoutReduce(stFenced.unionAll(tagged), stFenced.unionAll(salted(tagged)))
+          Lww.reduceBucketed(stFenced.unionAll(tagged), table.keyCols, table.numBuckets)
         }
       val merged = if (writeMetrics) merged0.persist(StorageLevel.MEMORY_AND_DISK) else merged0
 

@@ -1,5 +1,7 @@
 package graft.merge
 
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -139,7 +141,6 @@ object MultiTable {
       batch: DataFrame,
       routeCol: String,
       batchId: Long,
-      salt: Int = 1,
       writeMetrics: Boolean = false,
       fenceByWatermark: Boolean = true,
       parallelism: Int = 1): Map[String, CdcApply.BatchResult] = {
@@ -147,8 +148,8 @@ object MultiTable {
     def applyOne(d: TableDef): CdcApply.BatchResult = {
       val slice = cached.where(col(routeCol) === d.name).drop(routeCol)
       val processed = d.postProcessors.foldLeft(slice)((df, p) => p(df))
-      CdcApply.applyBatch(spark, registry(d.name), processed, batchId, salt,
-        writeMetrics, fenceByWatermark, cacheBatch = false)
+      CdcApply.applyBatch(spark, registry(d.name), processed, batchId,
+        writeMetrics = writeMetrics, fenceByWatermark = fenceByWatermark, cacheBatch = false)
     }
     try {
       val done: Seq[(String, scala.util.Try[CdcApply.BatchResult])] =
@@ -213,9 +214,10 @@ object MultiTable {
   //
   // Retention contract: atomic reads time-travel to the recorded
   // versions, so per-table `expireSnapshots` must keep at least the
-  // catalog head's versions (they ARE the heads unless a writer is
-  // mid-batch, so any keepLast ≥ 1 plus no expiry concurrent with an
-  // in-flight batch satisfies it).
+  // catalog head's versions. They are the heads unless a writer is
+  // mid-batch or out-of-band commits landed after the batch, so keepLast
+  // must exceed the out-of-band commits made per batch, and no expiry may
+  // run concurrent with an in-flight batch.
   // ------------------------------------------------------------------
 
   /** One catalog manifest: the per-table commit versions visible at and
@@ -237,13 +239,32 @@ object MultiTable {
     new graft.table.FileCommitStore(java.nio.file.Paths.get(registry.root, "_catalog"))
 
   private val CatalogName = "c(\\d+)\\.json".r
+
+  /** Manifest codec: the commit log's Jackson mapper both ways, so field
+    * order, extra fields and any character in a table name survive; a
+    * missing or non-integral field fails loudly.
+    */
   private def parseCatalog(text: String): CatalogCommit = {
-    val seq = """"seq"\s*:\s*(\d+)""".r.findFirstMatchIn(text).get.group(1).toLong
-    val batchId = """"batchId"\s*:\s*(-?\d+)""".r.findFirstMatchIn(text).get.group(1).toLong
-    val vs = """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(
-      text.substring(text.indexOf("versions"))).map(m => m.group(1) -> m.group(2).toLong).toMap
-    CatalogCommit(seq, batchId, vs)
+    def long(n: JsonNode, name: String): Long = Option(n.get(name)) match {
+      case Some(v) if v.isIntegralNumber => v.asLong()
+      case _ => throw new IllegalStateException(
+        s"catalog manifest field '$name' is missing or not an integer: $text")
+    }
+    val o = LakeTable.mapper.readTree(text)
+    val vs = Option(o.get("versions")).filter(_.isObject).getOrElse(
+      throw new IllegalStateException(s"catalog manifest lacks a 'versions' object: $text"))
+    CatalogCommit(long(o, "seq"), long(o, "batchId"),
+      vs.fieldNames().asScala.map(n => n -> long(vs, n)).toMap)
   }
+
+  private def renderCatalog(cc: CatalogCommit): String = {
+    val o = LakeTable.mapper.createObjectNode()
+    o.put("seq", cc.seq).put("batchId", cc.batchId)
+    val vs = o.putObject("versions")
+    cc.versions.toSeq.sortBy(_._1).foreach { case (n, v) => vs.put(n, v) }
+    LakeTable.mapper.writeValueAsString(o)
+  }
+
   private def catalogNames(store: graft.table.CommitStore): Seq[String] =
     store.listNames().filter(CatalogName.matches).sorted
 
@@ -262,8 +283,12 @@ object MultiTable {
     catalogNames(store).lastOption.map(n => parseCatalog(store.read(n)))
   }
 
-  /** Publish the catalog manifest for `batchId`: every table's CURRENT
-    * head version, CAS-published through the [[graft.table.CommitStore]]
+  /** Publish the catalog manifest for `batchId`. Each table is recorded
+    * at the version its apply of this batch produced (`produced`, from the
+    * [[CdcApply.BatchResult]]s); only tables missing from `produced` fall
+    * back to their CURRENT head, so an out-of-band commit landing between
+    * apply and publish is never stamped into the batch's manifest.
+    * CAS-published through the [[graft.table.CommitStore]]
     * seam (create fails loudly on a lost race, the
     * [[graft.table.LakeTable.commit]] pattern). Idempotent per
     * batch: a replayed batch whose applies all no-op'd publishes a
@@ -272,21 +297,21 @@ object MultiTable {
     * than [[KeepCatalogManifests]] are pruned after a successful publish
     * (each manifest is self-contained; the head is never touched).
     */
-  def commitCatalog(registry: Registry, batchId: Long): CatalogCommit = {
+  def commitCatalog(
+      registry: Registry,
+      batchId: Long,
+      produced: Map[String, Long] = Map.empty): CatalogCommit = {
     val store = catalogStore(registry)
     val last = lastCatalogCommit(registry)
-    val versions = registry.defs.map(d =>
-      d.name -> registry(d.name).lastCommit().map(_.version).getOrElse(0L)).toMap
+    val versions = registry.defs.map(d => d.name -> produced.getOrElse(d.name,
+      registry(d.name).lastCommit().map(_.version).getOrElse(0L))).toMap
     last match {
       case Some(c) if c.batchId == batchId && c.versions == versions => return c
       case _ =>
     }
     val seq = last.map(_.seq + 1).getOrElse(1L)
     val cc = CatalogCommit(seq, batchId, versions)
-    val vJson = versions.toSeq.sortBy(_._1)
-      .map { case (n, v) => s""""$n":$v""" }.mkString("{", ",", "}")
-    try store.create(f"c$seq%020d.json",
-      s"""{"seq":$seq,"batchId":$batchId,"versions":$vJson}""")
+    try store.create(f"c$seq%020d.json", renderCatalog(cc))
     catch {
       case e: graft.table.CommitStore.AlreadyExists =>
         throw new java.util.ConcurrentModificationException(
@@ -310,13 +335,12 @@ object MultiTable {
       batch: DataFrame,
       routeCol: String,
       batchId: Long,
-      salt: Int = 1,
       writeMetrics: Boolean = false,
       fenceByWatermark: Boolean = true,
       parallelism: Int = 1): Map[String, CdcApply.BatchResult] = {
-    val res = applyBatch(spark, registry, batch, routeCol, batchId, salt,
-      writeMetrics, fenceByWatermark, parallelism)
-    commitCatalog(registry, batchId)
+    val res = applyBatch(spark, registry, batch, routeCol, batchId,
+      writeMetrics = writeMetrics, fenceByWatermark = fenceByWatermark, parallelism = parallelism)
+    commitCatalog(registry, batchId, res.map { case (n, r) => n -> r.version })
     res
   }
 

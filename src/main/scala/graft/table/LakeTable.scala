@@ -1099,18 +1099,33 @@ final class LakeTable(
     * disk where other hosts cannot see it). With an injected backend the
     * entries live alongside the commits, namespaced `ref_<name>.json`
     * (the commit-name filter `v\d+\.json` cannot collide); the file
-    * default keeps its own `_refs/` directory.
+    * default keeps its own `_refs/` directory, where tags written before
+    * the namespace existed sit as `<name>.json` and still count.
     */
   private val refsStore: CommitStore = commitStore.getOrElse(new FileCommitStore(refsDir))
   private def refEntry(name: String): String = s"ref_$name.json"
 
+  /** Every ref entry as (entry, tag name, version); the tag name is read
+    * from the entry, never from its file name, so legacy and namespaced
+    * entries resolve alike.
+    */
+  private def refEntries(): Seq[(String, String, Long)] =
+    refsStore.listNames()
+      .filter(n => n.endsWith(".json") && (commitStore.isEmpty || n.startsWith("ref_")))
+      .map { n =>
+        val o = LakeTable.mapper.readTree(refsStore.read(n))
+        (n, o.get("name").asText(), o.get("version").asLong())
+      }
+
   /** Pin `version` under `name`. Tags are immutable by default — retagging
     * an existing name requires `replace = true` (the Iceberg
-    * replace-tag distinction).
+    * replace-tag distinction), which also retires a legacy entry.
     */
   def tag(name: String, version: Long, replace: Boolean = false): Unit = {
     require(refName.matches(name), s"invalid tag name '$name'")
     require(commitVersions().contains(version), s"no commit at version $version")
+    val legacy = refEntries().collect { case (e, n, _) if n == name && e != refEntry(name) => e }
+    require(replace || legacy.isEmpty, s"tag '$name' exists (use replace = true)")
     val json = s"""{"name":"$name","version":$version,"tsMs":${System.currentTimeMillis()}}"""
     if (replace) refsStore.replace(refEntry(name), json)
     else
@@ -1120,23 +1135,19 @@ final class LakeTable(
           throw new IllegalArgumentException(
             s"requirement failed: tag '$name' exists (use replace = true)", e)
       }
+    legacy.foreach(refsStore.delete)
   }
 
   def tags(): Map[String, Long] =
-    refsStore.listNames()
-      .filter(n => n.startsWith("ref_") && n.endsWith(".json"))
-      .map { n =>
-        val o = LakeTable.mapper.readTree(refsStore.read(n))
-        o.get("name").asText() -> o.get("version").asLong()
-      }.toMap
+    refEntries().map { case (_, n, v) => n -> v }.toMap
 
   def dropTag(name: String): Boolean = {
     // same validation as tag(): a separator-bearing name would resolve
     // outside the ref namespace and delete arbitrary json (e.g. a commit)
     require(refName.matches(name), s"invalid tag name '$name'")
-    val existed = refsStore.listNames().contains(refEntry(name))
-    refsStore.delete(refEntry(name))
-    existed
+    val entries = refEntries().collect { case (e, n, _) if n == name => e }
+    entries.foreach(refsStore.delete)
+    entries.nonEmpty
   }
 
   /** Time travel by name: `VERSION AS OF '<tag>'`. */
@@ -1237,7 +1248,7 @@ final class LakeTable(
     *
     * CONTRACT: the input must be laid out one-partition-per-bucket —
     * physical partition id == `pmod(hash(repo, path), numBuckets)` — which
-    * is exactly what `Lww.reducePartitioned(_, numBuckets)` produces
+    * is exactly what `Lww.reduceBucketed(_, keyCols, numBuckets)` produces
     * (Spark's HashPartitioning partition-id expression IS the bucket
     * function). The bucket of each file is then recovered from its
     * `part-NNNNN` index, so the write is a plain parquet write: no
@@ -1372,7 +1383,7 @@ final class LakeTable(
   * source of truth, so the codec is deliberately explicit).
   */
 object LakeTable {
-  private val mapper = new ObjectMapper()
+  private[graft] val mapper = new ObjectMapper()
 
   /** One shared read-only Hadoop conf for footer reads (XML parsing per
     * `new Configuration()` costs more than the read itself).

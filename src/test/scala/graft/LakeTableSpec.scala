@@ -281,8 +281,8 @@ class LakeTableSpec extends SparkSpec {
     val ci = table.lastCommit().get
     val state = table.bucketedState(spark, ci, None, ci.schema).get
     val upd = FlatEvent.mk(("repo0", "p0.txt"), 999, "u")
-    val batchW = graft.operators.Lww.reducePartitioned(
-      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), numPartitions = 8)
+    val batchW = graft.operators.Lww.reduceBucketed(
+      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), table.keyCols, table.numBuckets)
     val merged = graft.operators.Lww.mergeCoPartitioned(state, batchW)
     val plan = merged.queryExecution.executedPlan.toString
     assert(plan.contains("Bucketed: true"), s"state scan must report the bucket layout:\n$plan")
@@ -306,8 +306,8 @@ class LakeTableSpec extends SparkSpec {
     val ci = table.lastCommit().get
     val state = table.bucketedState(spark, ci, None, ci.schema).get
     val upd = FlatEvent.mk(("repo0", "p0.txt"), 999, "u")
-    val batchW = graft.operators.Lww.reducePartitioned(
-      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), numPartitions = 8)
+    val batchW = graft.operators.Lww.reduceBucketed(
+      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), table.keyCols, table.numBuckets)
     val merged = graft.operators.Lww.mergeCoPartitioned(state, batchW, smj = true)
     val plan = merged.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), s"sorted-bucket merge must plan SMJ:\n$plan")
@@ -466,8 +466,8 @@ class LakeTableSpec extends SparkSpec {
 
     val state = table.bucketedState(spark, ci, None, ci.schema).get
     val upd = FlatEvent.mk(("repo0", "p0.txt"), 999, "u")
-    val batchW = graft.operators.Lww.reducePartitioned(
-      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), numPartitions = 4)
+    val batchW = graft.operators.Lww.reduceBucketed(
+      graft.table.SchemaEvolution.align(Seq(upd).toDF(), ci.schema), table.keyCols, table.numBuckets)
     val merged = graft.operators.Lww.mergeCoPartitioned(state, batchW)
     val plan = merged.queryExecution.executedPlan.toString
     assert(plan.contains("Bucketed: true"), s"multi-file state scan must report the bucket layout:\n$plan")
@@ -645,6 +645,30 @@ class LakeTableSpec extends SparkSpec {
     assert(table.commits().map(_.version) === Seq(4L))
     // a fresh handle sees the same refs state (files, not memory)
     assert(graft.table.LakeTable.open(table.root).tags() === Map.empty)
+  }
+
+  test("legacy _refs/<name>.json tags stay listed, resolvable, expiry-clamping and droppable") {
+    val log = randomLog(54, 400)
+    val table = new LakeTable(tmp(), numBuckets = 8)
+    CdcPipeline.replay(spark, log.toDF(), table, numBatches = 4, writeMetrics = false)
+    // a tag as written before refs were namespaced `ref_<name>.json`
+    val refs = java.nio.file.Paths.get(table.root, "_refs")
+    Files.createDirectories(refs)
+    Files.writeString(refs.resolve("old.json"), """{"name":"old","version":2,"tsMs":0}""")
+    val atV2 = table.snapshotAt(spark, 2L).get.as[FlatEvent].collect().toSet
+
+    assert(table.tags() === Map("old" -> 2L))
+    assert(table.snapshotAtTag(spark, "old").get.as[FlatEvent].collect().toSet === atV2)
+    intercept[IllegalArgumentException](table.tag("old", 3L))
+    val (dropped, _) = table.expireSnapshots(keepLast = 1)
+    assert(dropped === 1)
+    assert(table.commits().map(_.version) === Seq(2L, 3L, 4L))
+    assert(table.snapshotAtTag(spark, "old").get.as[FlatEvent].collect().toSet === atV2,
+      "the legacy-tagged version must stay readable after expiry")
+
+    assert(table.dropTag("old"))
+    assert(table.tags() === Map.empty)
+    assert(!Files.exists(refs.resolve("old.json")))
   }
 
   test("removeOrphanFiles deletes only unreferenced data files") {

@@ -30,8 +30,8 @@ class LwwSpec extends SparkSpec {
       }
     }
 
-  private def engineState(events: Seq[FlatEvent], salt: Int): Map[(String, String), FlatEvent] =
-    Lww.applyState(events.toDF(), salt = salt).as[FlatEvent].collect()
+  private def engineState(events: Seq[FlatEvent]): Map[(String, String), FlatEvent] =
+    Lww.applyState(events.toDF()).as[FlatEvent].collect()
       .map(e => (e.repo, e.path) -> e).toMap
 
   private def randomLog(seed: Int, n: Int, withTruncate: Boolean): Seq[FlatEvent] = {
@@ -47,31 +47,46 @@ class LwwSpec extends SparkSpec {
     evs ++ evs.filter(_ => rnd.nextInt(5) == 0)
   }
 
-  test("reduceBucketedExact: plan-verified partition contract; subset-partitioned input falls back") {
+  test("reduceBucketed: plan-verified bucket contract; subset-partitioned input falls back") {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
+      val keys = Seq("repo", "path")
       val events = randomLog(7, 120, withTruncate = false).toDF()
-      val exact = Lww.reduceBucketedExact(events, Seq("repo", "path"), 4)
-      assert(exact.isDefined, "fresh input must plan the exchange and qualify")
-      val plan = exact.get.queryExecution.executedPlan.toString
+      val combined = Lww.reduceBucketed(events, keys, 4)
+      val plan = combined.queryExecution.executedPlan.toString
       assert("Exchange".r.findAllMatchIn(plan).size === 1)
       // max_by over a struct buffer plans SortAggregate; the partial
       // (map-side combine) phase below the exchange is the point.
       assert(plan.contains("partial_max_by"),
         s"partial aggregate (map-side combine) must run below the exchange:\n$plan")
-      // same winners as the repartition-shaped reduce
-      val viaExact = exact.get.as[FlatEvent].collect().map(e => (e.repo, e.path) -> e).toMap
-      val viaRepart = Lww.reducePartitioned(events, Seq("repo", "path"), 4)
-        .as[FlatEvent].collect().map(e => (e.repo, e.path) -> e).toMap
-      assert(viaExact === viaRepart)
 
       // input already hash-partitioned on a SUBSET of the keys at the
-      // right count: Catalyst plans NO exchange (ClusteredDistribution
-      // accepts subsets), so partition-id != bucket — must fall back.
-      val pre = events.repartition(4, col("repo"))
-      assert(Lww.reduceBucketedExact(pre, Seq("repo", "path"), 4).isEmpty,
-        "exchange-elided plan must be rejected (partition-id==bucket unprovable)")
+      // right count: a plain groupBy plans NO exchange (ClusteredDistribution
+      // accepts subsets), so partition-id != bucket — the repartition shape
+      // must restore the bucket layout.
+      val fallback = Lww.reduceBucketed(events.repartition(4, col("repo")), keys, 4)
+      fallback.queryExecution.executedPlan.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          assert(h.numPartitions === 4)
+          assert(h.expressions.collect {
+            case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name
+          } === keys)
+        case other => fail(s"fallback must be hash-partitioned on the full key: $other")
+      }
+      def winners(df: org.apache.spark.sql.DataFrame) =
+        df.as[FlatEvent].collect().map(e => (e.repo, e.path) -> e).toMap
+      assert(winners(combined) === winners(fallback))
+
+      // Skew bound of the combined plan: one hot key spread over P input
+      // partitions ships at most one row per map task.
+      val p = 3
+      val hot = (1 to 300).map(i => FlatEvent.mk(("hot", "k.txt"), i.toLong, "u"))
+      val hotDf = spark.createDataset(spark.sparkContext.parallelize(hot, p)).toDF()
+      val written = taskMetric(_.shuffleWriteMetrics.recordsWritten) {
+        assert(Lww.reduceBucketed(hotDf, keys, 4).collect().length === 1)
+      }
+      assert(written > 0 && written <= p, s"hot key wrote $written shuffle records over $p map tasks")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
@@ -88,32 +103,14 @@ class LwwSpec extends SparkSpec {
   test("applyState converges to the sequential fold oracle (no truncate)") {
     for (seed <- 1 to 5) {
       val log = randomLog(seed, 300, withTruncate = false)
-      assert(engineState(log, salt = 1) === foldOracle(log), s"seed=$seed")
+      assert(engineState(log) === foldOracle(log), s"seed=$seed")
     }
   }
 
   test("applyState converges with truncate events (table-scoped fence)") {
     for (seed <- 10 to 14) {
       val log = randomLog(seed, 300, withTruncate = true)
-      assert(engineState(log, salt = 1) === foldOracle(log), s"seed=$seed")
-    }
-  }
-
-  test("salted reduction is equivalent to unsalted") {
-    for (seed <- 20 to 22) {
-      val log = randomLog(seed, 300, withTruncate = true)
-      assert(engineState(log, salt = 8) === engineState(log, salt = 1), s"seed=$seed")
-    }
-  }
-
-  test("aggregate reduce (max_by) and window reduce (row_number) are equivalent") {
-    for (seed <- 25 to 27) {
-      val log = randomLog(seed, 300, withTruncate = false)
-      val agg = Lww.reduce(log.toDF()).as[FlatEvent].collect().sortBy(_.lsn)
-      val win = Lww.reduceWindow(log.toDF()).as[FlatEvent].collect().sortBy(_.lsn)
-      val winSalted = Lww.reduceWindow(log.toDF(), salt = 4).as[FlatEvent].collect().sortBy(_.lsn)
-      assert(agg.toSeq === win.toSeq, s"seed=$seed")
-      assert(agg.toSeq === winSalted.toSeq, s"seed=$seed")
+      assert(engineState(log) === foldOracle(log), s"seed=$seed")
     }
   }
 

@@ -183,6 +183,39 @@ class MultiTableSpec extends SparkSpec {
       "re-publishing an identical manifest must not append a new one")
   }
 
+  test("catalog manifests: extra fields parse, quoted table names round-trip, a missing versions map fails") {
+    val reg = new Registry(Files.createTempDirectory("multi-manifest").toString, Seq(
+      TableDef("a\"b", Seq("repo", "path"), 2)))
+    val evs = Seq(FlatEvent.mk(("r1", "x"), 1, "c")).toDF().withColumn("route", lit("a\"b"))
+    MultiTable.applyBatchAtomic(spark, reg, evs, "route", 0)
+    assert(MultiTable.lastCatalogCommit(reg).get.versions === Map("a\"b" -> 1L))
+
+    val dir = java.nio.file.Paths.get(reg.root, "_catalog")
+    Files.writeString(dir.resolve("c00000000000000000002.json"),
+      """{"seq":2,"batchId":1,"versions":{"a\"b":1,"t2":7},"note":{"x":3}}""")
+    assert(MultiTable.lastCatalogCommit(reg).get ===
+      MultiTable.CatalogCommit(2L, 1L, Map("a\"b" -> 1L, "t2" -> 7L)))
+
+    Files.writeString(dir.resolve("c00000000000000000003.json"), """{"seq":3,"batchId":2}""")
+    intercept[IllegalStateException](MultiTable.lastCatalogCommit(reg))
+  }
+
+  test("catalog manifest records the versions the batch produced, not later out-of-band heads") {
+    val reg = new Registry(Files.createTempDirectory("multi-oob").toString, Seq(
+      TableDef("a", Seq("repo", "path"), 2),
+      TableDef("b", Seq("repo", "path"), 2)))
+    val evs = Seq(FlatEvent.mk(("r1", "x"), 1, "c"), FlatEvent.mk(("r2", "y"), 2, "c")).toDF()
+      .withColumn("route", when(col("repo") === "r1", "a").otherwise("b"))
+    val res = MultiTable.applyBatch(spark, reg, evs, "route", 0)
+    // an out-of-band commit lands on table a before the manifest publishes
+    graft.merge.CdcApply.applyBatch(spark, reg("a"), Seq(FlatEvent.mk(("r1", "z"), 3, "c")).toDF(),
+      batchId = 0, writeMetrics = false, fenceByBatchId = false)
+    assert(reg("a").lastCommit().get.version === 2L)
+    val cc = MultiTable.commitCatalog(reg, 0, res.map { case (n, r) => n -> r.version })
+    assert(cc.versions === Map("a" -> 1L, "b" -> 1L))
+    assert(MultiTable.lastCatalogCommit(reg).get.versions === Map("a" -> 1L, "b" -> 1L))
+  }
+
   test("schema evolution stays per-table: a slice that routes zero rows does not evolve") {
     val reg = new Registry(Files.createTempDirectory("multi-evo").toString, Seq(
       TableDef("a", Seq("repo", "path"), 2),

@@ -66,7 +66,7 @@ class ReplayPropertySpec extends SparkSpec {
         val batches = (0 +: cuts :+ log.size).sliding(2).collect { case Seq(a, b) => log.slice(a, b) }.toSeq
         batches.zipWithIndex.foreach { case (b, i) =>
           // empty slices skipped: batchId gaps are legal (Spark can skip ids)
-          if (b.nonEmpty) CdcApply.applyBatch(spark, table, b.toDF(), batchId = i, salt = 2)
+          if (b.nonEmpty) CdcApply.applyBatch(spark, table, b.toDF(), batchId = i)
         }
         tableState(table) == foldOracle(log)
       }
